@@ -291,15 +291,14 @@ def bar_directional_features_chunked(
     df: DataFrame,
     key: str = "bar_close_ns",
     chunk_ns: int | None = None,
-    mode: str = "auto",
 ) -> DataFrame:
     """Single-stream form of :func:`bar_directional_features`: tick-rule
     side AND the flip spreads ride one side-frame window pass
-    (``preprocess.chunked_side_frame``). ``mode="chunked"`` is the
-    zero-SinglePartition scale plan; ``"auto"`` (default) drops to the
-    cheaper global window below the measured crossover — bit-identical
-    either way (the stacked lag expressions read the same helper
-    columns, typed NULLs in global mode).
+    (``preprocess.chunked_side_frame``): the zero-SinglePartition
+    chunked plan at scale, the cheaper global window below the measured
+    crossover (``preprocess.SIDE_SMALL_ROWS``) — bit-identical either
+    way (the stacked lag expressions read the same helper columns,
+    typed NULLs in global mode).
     Cross-chunk lags come from the per-chunk summary: each chunk's first
     row compares against ``_prev_last_p`` (previous chunk's last price)
     and ``coalesce(_carry, 1)`` (previous chunk's last row's side), so
@@ -311,7 +310,7 @@ def bar_directional_features_chunked(
     from .preprocess import SIDE_HELPERS, chunked_side_frame
 
     kwargs = {} if chunk_ns is None else {"chunk_ns": chunk_ns}
-    d, w = chunked_side_frame(df, mode=mode, **kwargs)
+    d, w = chunked_side_frame(df, **kwargs)
     lag_side = F.lag("side").over(w)
     lag_price = F.lag("price").over(w)
     prev_exists = F.col("_prev_last_p").isNotNull()

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import gate
 from .text import STOPWORDS, tokens
 
 
@@ -86,10 +87,6 @@ def tfidf_keywords(
         )
     )
 
-#: Test hook: force the segment_dedup execution mode regardless of the
-#: caller's ``onepart`` (True/False); None = respect the caller.
-_FORCE_SEGDEDUP_ONEPART: bool | None = None
-
 
 def segment_dedup(
     docs: DataFrame,
@@ -134,15 +131,18 @@ def segment_dedup(
     group regardless of partitioning, and the reassembly agg sorts the
     collected structs. The at-scale caller leaves ``onepart=False``
     and keeps the digest-parallel window — the plan a 100 TB corpus
-    needs. ``test_plan_regression`` pins both sides via the force hook:
+    needs. ``test_plan_regression`` pins both sides with
+    ``gate.force(segment_dedup="onepart"|"parallel")``, which overrides
+    the caller's ``onepart``:
     ``test_no_single_partition_exchange[segment_dedup]`` holds the
     at-scale plan SinglePartition-free, and
     ``test_segment_dedup_modes_bit_identical`` asserts the two modes
     yield byte-identical rows AND that the fused mode actually plans
     the single-partition shape.
     """
-    if _FORCE_SEGDEDUP_ONEPART is not None:
-        onepart = _FORCE_SEGDEDUP_ONEPART
+    side = gate.forced("segment_dedup")
+    if side is not None:
+        onepart = side == "onepart"
     t = tokens(text_col)
     nseg = F.ceil(F.size(t) / F.lit(seg_tokens)).cast("int")
     segs = docs.select(

@@ -17,7 +17,7 @@ import random
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .. import cache
+from .. import cache, gate
 from .text import let_bind, shingle_hashes_from_tokens, shingles, token_hashes  # noqa: F401 (shingles kept for API)
 
 MOD = 1_000_000_007
@@ -56,11 +56,6 @@ def normalized_dedup(
     )
 
 
-#: shingle_hashes engine force hook ("arrow"/"hof") — tests pin the
-#: element-identity of the two forms with it
-_FORCE_SHINGLE_ENGINE: str | None = None
-
-
 def shingle_hashes(text_col: str = "text", k: int = 3, engine: str = "hof") -> Column:
     """Distinct token-k-gram shingle hashes, combined from per-token
     polynomial hashes (hash each token once, fold k of them — 3× less
@@ -80,7 +75,7 @@ def shingle_hashes(text_col: str = "text", k: int = 3, engine: str = "hof") -> C
       that is ``_positional_trigram_rows`` (dup_span_ranges, ~5×)."""
     from .text import shingle_hashes_arrow
 
-    if (_FORCE_SHINGLE_ENGINE or engine) == "arrow":
+    if engine == "arrow":
         return shingle_hashes_arrow(text_col, k)
     return shingle_hashes_from_tokens(token_hashes(text_col), k)
 
@@ -317,11 +312,6 @@ def ngram_jaccard_pairs(
     )
 
 
-#: dup_span_ranges engine force hook ("arrow"/"hof") — tests pin the
-#: bit-identity of the two positional-shingle stages with it
-_FORCE_SPANS_ENGINE: str | None = None
-
-
 def _positional_trigram_rows(
     docs: DataFrame, k: int, text_col: str, id_col: str
 ) -> DataFrame:
@@ -514,7 +504,7 @@ def dup_span_ranges(
     """
     from .text import positional_shingle_hashes
 
-    if (_FORCE_SPANS_ENGINE or engine) == "arrow":
+    if engine == "arrow":
         e = _positional_trigram_rows(docs, k, text_col, id_col)
     else:
         g = positional_shingle_hashes(token_hashes(text_col), k)
@@ -542,12 +532,6 @@ def dup_span_ranges(
     ).select(
         F.col("doc").alias(id_col), "span_start", "span_end", "n_grams"
     )
-
-
-def _bit(h: Column, i: Column) -> Column:
-    """(h >> i) & 1 with a Column shift count (shiftright needs a literal):
-    floor(h / 2^i) % 2 — exact for h < 2^53 in double space."""
-    return (F.floor(h / F.pow(F.lit(2.0), i)) % 2).cast("long")
 
 
 def simhash(hashes: Column, bits: int = 32) -> Column:
@@ -734,7 +718,6 @@ def read_simhash_edges(spark, path: str) -> DataFrame:
 #: distributed min-label loop runs unchanged, so the 100 TB path never
 #: touches the driver.
 CC_DRIVER_MAX_EDGES = 2_000_000
-_FORCE_CC_STATE: str | None = None  # test hook: "driver"/"distributed"
 
 
 def dedup_clusters(
@@ -742,15 +725,15 @@ def dedup_clusters(
     docs: DataFrame | None = None,
     id_col: str = "doc_id",
     max_iter: int = 30,
-    state: str = "auto",
 ) -> DataFrame:
     """Connected components over near-dup pairs -> (doc_id, cluster_id),
     cluster_id = min doc id in the component. The last mile of fuzzy
     dedup: pair lists become keep/drop decisions only once transitively
     connected docs share one cluster.
 
-    ``state="auto"`` (default): probe the pair chain ONCE with a
-    ``LIMIT CC_DRIVER_MAX_EDGES+1`` collect — if every edge fits, a
+    Crossover (``gate.int_edges``; tests pin a side with
+    ``gate.force(dedup_clusters=...)``): probe the pair chain ONCE with a
+    ``LIMIT CC_DRIVER_MAX_EDGES+1`` Arrow fetch — if every edge fits, a
     driver union-find labels the components in microseconds (exact
     integer min-per-component, bit-identical to the distributed
     fixpoint — pinned by test) and the result replants as a JVM
@@ -772,49 +755,14 @@ def dedup_clusters(
     ``docs`` given -> singleton docs are included with cluster_id = own
     id (the full corpus mapping a keep-one-per-cluster filter needs).
     """
-    st = _FORCE_CC_STATE or state
-    if st not in ("auto", "driver", "distributed"):
-        raise ValueError(
-            f"dedup_clusters: unknown state {st!r} "
-            "(expected 'auto', 'driver' or 'distributed')"
-        )
-    _int_dts = ("tinyint", "smallint", "int", "bigint")
-    dts = dict(pairs.dtypes)
-    int_ids = dts["doc_a"] in _int_dts and dts["doc_b"] in _int_dts
-    if st == "driver" and not int_ids:
-        raise ValueError(
-            "dedup_clusters: the driver union-find supports integer doc "
-            "ids only — use state='distributed' for other id types"
-        )
-    if st in ("auto", "driver") and int_ids:
-        # Arrow probe, not collect(): 2M edges land as two int64 buffers
-        # (~32 MB) instead of ~2M Row objects (hundreds of MB transient
-        # Python heap). The union-find itself is a Python loop — µs at
-        # typical near-dup volumes, ~seconds right at the gate, still at
-        # or below the distributed loop's fixed per-round cost.
-        tbl = (
-            pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-            .limit(CC_DRIVER_MAX_EDGES + 1)
-            .toArrow()
-        )
-        no_nulls = (
-            tbl.column("a").null_count == 0 and tbl.column("b").null_count == 0
-        )
-        if tbl.num_rows <= CC_DRIVER_MAX_EDGES and no_nulls:
-            # emit the SAME column type the distributed path would:
-            # its edges union(a,b)/(b,a) widens to the wider of the two
-            # input int types, so the crossover never flips the schema
-            common_dt = max(dts["doc_a"], dts["doc_b"], key=_int_dts.index)
-            comp = _cc_driver(pairs.sparkSession, tbl, id_col, common_dt)
-            return _cc_with_singletons(comp, docs, id_col)
-        if st == "driver":
-            raise ValueError(
-                "dedup_clusters: state='driver' but the edge list exceeds "
-                f"CC_DRIVER_MAX_EDGES={CC_DRIVER_MAX_EDGES} or contains "
-                "NULL ids"
-            )
-        # fall through: the pair chain re-executes in the loop below —
-        # the price of a wrong probe, paid only above the gate
+    # the union-find itself is a Python loop — µs at typical near-dup
+    # volumes, ~seconds right at the gate, still at or below the
+    # distributed loop's fixed per-round cost
+    small = gate.int_edges("dedup_clusters", pairs, "doc_a", "doc_b", CC_DRIVER_MAX_EDGES)
+    if small is not None:
+        tbl, out_type = small
+        comp = _cc_driver(pairs.sparkSession, tbl, id_col, out_type)
+        return _cc_with_singletons(comp, docs, id_col)
     e = pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
     # eager=False: the convergence-probe count is the materializing
     # action; unchecked iterations chain into the next job (same cut)
@@ -868,25 +816,18 @@ def _cc_with_singletons(
     )
 
 
-def _cc_driver(spark, tbl, id_col: str, out_dt: str = "bigint") -> DataFrame:
+def _cc_driver(spark, tbl, id_col: str, out_type=None) -> DataFrame:
     """Driver union-find for :func:`dedup_clusters`' small-edge path:
     path-halving find + union by attachment, then min doc id per root —
     identical by definition to the distributed min-label fixpoint
     (cluster_id = min id in the component; exact integers — the caller
-    guards the id dtype). ``tbl``: a pyarrow table of (a, b) edges;
-    ``out_dt``: the Spark int dtype both output columns are emitted as
-    (the caller passes the distributed path's union-widened type so the
-    crossover is schema-invisible)."""
+    guards the id dtype). ``tbl``, ``out_type``: the pyarrow (a, b)
+    edge table and output id type (default int64) from
+    ``gate.int_edges``."""
     import pyarrow as pa
 
-    _pa_int = {
-        "tinyint": pa.int8(),
-        "smallint": pa.int16(),
-        "int": pa.int32(),
-        "bigint": pa.int64(),
-    }
-    out_type = _pa_int[out_dt]
-
+    if out_type is None:
+        out_type = pa.int64()
     parent: dict[int, int] = {}
 
     def find(x: int) -> int:

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .. import cache
+from .. import cache, gate
 from ..functions.sqlstage import sql_stage
 from .joins import range_join
 
@@ -279,7 +279,6 @@ SWEEP_DRIVER_MAX_EVENTS = 200_000
 #: (2 rows per event + 1 per time chunk; the ×3 slack admits up to
 #: one chunk-head row per event before falling through).
 SWEEP_DRIVER_MAX_ROWS = 3 * SWEEP_DRIVER_MAX_EVENTS
-_FORCE_SWEEP_SMALL_STATE: str | None = None  # test hook: "driver"/"cut"
 
 
 def span_sweep(
@@ -446,7 +445,7 @@ FROM w2 WHERE _prio = 0 OR _rn = 1
     #   a leaf, which beats keep's repeated deep-subtree analysis
     #   despite cut's up-front planning pass.
     small_df = sql_stage(small_sql, spans=spans, trades=trades)
-    state = _FORCE_SWEEP_SMALL_STATE or (
+    state = gate.forced("span_sweep") or (
         "driver"
         if est_events is not None and est_events <= SWEEP_DRIVER_MAX_EVENTS
         else "cut"
@@ -520,8 +519,8 @@ def _sweep_pivot_driver(small_df: DataFrame) -> DataFrame | None:
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    tbl = small_df.limit(SWEEP_DRIVER_MAX_ROWS + 1).toArrow()
-    if tbl.num_rows > SWEEP_DRIVER_MAX_ROWS:
+    tbl = gate.probe(small_df, SWEEP_DRIVER_MAX_ROWS)
+    if tbl is None:
         return None
     # filter BEFORE to_numpy: the full table has NULL event ids on
     # chunk-head trade rows, and pyarrow converts nullable int64 to

@@ -1717,26 +1717,30 @@ def frame_sample(df: DataFrame, every_n_bytes: int = 1024) -> DataFrame:
     return df.select("doc_id", F.explode(offsets).alias("frame_offset"))
 
 
-def phash64(px: np.ndarray) -> int:
-    """64-bit perceptual hash of a decoded image: nearest-neighbor
-    32×32 luminance resample → 2D DCT-II (explicit matmul in float64 —
-    deterministic, no FFT library variance) → 8×8 low-frequency block
-    (DC excluded) → bit_i = coeff_i > median(coeffs). Classic pHash;
-    robust to resizing/re-encoding, so equal content hashes equal even
-    across codecs."""
+#: pHash tie tolerance, relative to the largest DCT magnitude: float64
+#: rounding in the 32×32 DCT is ~1e-15 of it, real coefficient gaps far
+#: above 1e-9 of it
+PHASH_TIE_EPS = 1e-9
+
+
+def lum32(px: np.ndarray) -> np.ndarray:
+    """The 32×32 nearest-neighbor luminance resample pHash reads
+    (float64, channel mean)."""
     lum = px.astype(np.float64).mean(axis=2)
     h, w = lum.shape
-    ys = (np.arange(32) * h) // 32
-    xs = (np.arange(32) * w) // 32
-    s = lum[ys][:, xs]
-    n = 32
-    k = np.arange(n)
-    # DCT-II basis: C[u, x] = cos(pi*(2x+1)*u/(2n))
-    C = np.cos(np.pi * (2 * k[None, :] + 1) * k[:, None] / (2 * n))
-    d = C @ s @ C.T
+    return lum[(np.arange(32) * h) // 32][:, (np.arange(32) * w) // 32]
+
+
+def phash_bits(d: np.ndarray) -> int:
+    """Pack a 32×32 DCT into the 64-bit pHash: 8×8 low-frequency block
+    (DC excluded), bit_i = coeff_i above the block median. A coefficient
+    within ``PHASH_TIE_EPS`` × max|d| of the median counts as NOT above:
+    low-entropy images have many coefficients that are exactly zero in
+    exact arithmetic, and without the tie rule their bits would come
+    from float64 rounding noise, which depends on summation order."""
     block = d[:8, :8].flatten()[1:]  # drop DC
-    med = np.median(block)
-    bits = block > med
+    tol = PHASH_TIE_EPS * np.abs(d).max()
+    bits = block - np.median(block) > tol
     out = 0
     for i, b in enumerate(bits):
         if b:
@@ -1745,20 +1749,38 @@ def phash64(px: np.ndarray) -> int:
     return out - (1 << 64) if out >= (1 << 63) else out
 
 
-def image_phash(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def phash64(px: np.ndarray) -> int:
+    """64-bit perceptual hash of a decoded image: :func:`lum32`
+    resample → 2D DCT-II (explicit matmul in float64 — deterministic,
+    no FFT library variance) → :func:`phash_bits`. Classic pHash;
+    robust to resizing/re-encoding, so equal content hashes equal even
+    across codecs."""
+    k = np.arange(32)
+    # DCT-II basis: C[u, x] = cos(pi*(2x+1)*u/(2n))
+    C = np.cos(np.pi * (2 * k[None, :] + 1) * k[:, None] / 64)
+    return phash_bits(C @ lum32(px) @ C.T)
+
+
+def image_phash(df: DataFrame, id_col: str = "doc_id", with_grid: bool = False) -> DataFrame:
     """Perceptual-hash stage over image payloads (PNG/BMP/PPM):
-    (doc_id, phash) via mapInPandas where the bytes live."""
+    (doc_id, phash) via mapInPandas where the bytes live. ``with_grid``
+    adds ``grid``: the raw float64 bytes of the :func:`lum32` resample
+    the hash was computed from."""
 
     def _batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            rows = [
-                (int(i), phash64(image_pixels(bytes(b))))
-                for i, b in zip(pdf[id_col], pdf["payload"])
-            ]
-            yield pd.DataFrame(rows, columns=["doc_id", "phash"])
+            rows = []
+            for i, b in zip(pdf[id_col], pdf["payload"]):
+                px = image_pixels(bytes(b))
+                rows.append(
+                    (int(i), phash64(px)) + ((lum32(px).tobytes(),) if with_grid else ())
+                )
+            yield pd.DataFrame(
+                rows, columns=["doc_id", "phash"] + (["grid"] if with_grid else [])
+            )
 
     return df.select(id_col, "payload").mapInPandas(
-        _batch, schema="doc_id long, phash long"
+        _batch, schema="doc_id long, phash long" + (", grid binary" if with_grid else "")
     )
 
 
@@ -1782,14 +1804,17 @@ def phash_near_pairs(
 
 
 def phash_dup_pairs(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Image exact-perceptual-duplicate pairs: equi-join on the 64-bit
-    pHash (one shuffle of 8-byte keys; near-dup with hamming tolerance:
-    :func:`phash_near_pairs`)."""
-    d = image_phash(df, id_col=id_col)
-    l = d.select(F.col("doc_id").alias("doc_a"), "phash")
-    r = d.select(F.col("doc_id").alias("doc_b"), "phash")
+    """Image exact duplicates at pHash resolution: pairs whose decoded
+    pixels give the identical :func:`lum32` grid, so a resized or
+    re-encoded copy still pairs. Candidates come from an equi-join on
+    the 64-bit pHash; each is then verified on the grids, because
+    distinct low-entropy images can share a hash. Near-dup with hamming
+    tolerance: :func:`phash_near_pairs`."""
+    d = image_phash(df, id_col=id_col, with_grid=True)
+    l = d.select(F.col("doc_id").alias("doc_a"), "phash", F.col("grid").alias("_ga"))
+    r = d.select(F.col("doc_id").alias("doc_b"), "phash", F.col("grid").alias("_gb"))
     return (
         l.join(r, "phash")
-        .where(F.col("doc_a") < F.col("doc_b"))
+        .where((F.col("doc_a") < F.col("doc_b")) & (F.col("_ga") == F.col("_gb")))
         .select("doc_a", "doc_b", "phash")
     )

@@ -21,7 +21,7 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .. import cache
+from .. import cache, gate
 from ..functions.prefix import exclusive_prefix
 
 NS_PER = {"s": 1_000_000_000, "ms": 1_000_000, "us": 1_000, "ns": 1}
@@ -140,19 +140,8 @@ DAY_NS = 86_400_000_000_000
 #: switch is purely a cost decision)
 SIDE_SMALL_ROWS = 1_000_000
 
-#: test hook: force a side-path mode regardless of the caller's choice
-#: (the plan-regression suite pins "chunked" to assert the at-scale
-#: plan has zero SinglePartition even though the bench-scale inputs
-#: auto-select the global window)
-_FORCE_SIDE_MODE: str | None = None
 
-
-def with_trade_side_chunked(
-    df: DataFrame,
-    chunk_ns: int = DAY_NS,
-    mode: str = "auto",
-    small_rows: int = SIDE_SMALL_ROWS,
-) -> DataFrame:
+def with_trade_side_chunked(df: DataFrame, chunk_ns: int = DAY_NS) -> DataFrame:
     """Tick-rule side for a SINGLE un-partitioned stream without the
     global window that ``with_trade_side(by=None)`` plans as an
     ``Exchange SinglePartition``.
@@ -173,22 +162,16 @@ def with_trade_side_chunked(
     Multi-symbol data should keep using ``with_trade_side(by='symbol')``
     — hash partitioning is cheaper than chunk machinery.
 
-    ``mode``: ``"chunked"`` (the zero-SinglePartition scale path),
-    ``"global"`` (one ordered window — faster below ``small_rows``
-    because the chunk-carry machinery's fixed cost disappears), or
-    ``"auto"`` (a column-pruned count picks the side of the measured
-    crossover). Both paths are bit-identical.
+    Below ``SIDE_SMALL_ROWS`` rows (a column-pruned count decides) the
+    side is one ordered global window instead — faster there because
+    the chunk-carry machinery's fixed cost disappears; both paths are
+    bit-identical (tests pin a side with ``gate.force(trade_side=...)``).
     """
-    d, _ = chunked_side_frame(df, chunk_ns=chunk_ns, mode=mode, small_rows=small_rows)
+    d, _ = chunked_side_frame(df, chunk_ns=chunk_ns)
     return d.drop(*SIDE_HELPERS)
 
 
-def chunked_side_frame(
-    df: DataFrame,
-    chunk_ns: int = DAY_NS,
-    mode: str = "auto",
-    small_rows: int = SIDE_SMALL_ROWS,
-):
+def chunked_side_frame(df: DataFrame, chunk_ns: int = DAY_NS):
     """Internal: the time-chunked frame with ``side`` plus the
     ``SIDE_HELPERS`` columns still attached, and the per-chunk
     WindowSpec — for callers that stack more lag-1 window expressions
@@ -203,20 +186,19 @@ def chunked_side_frame(
       row (the carry accumulates every earlier chunk's last nonzero
       sign, which is exactly that row's side).
 
-    ``mode="global"`` (or ``"auto"`` below ``small_rows``) evaluates
-    the same semantics over ONE global ordered window — a deliberate
+    Below ``SIDE_SMALL_ROWS`` rows (or forced with
+    ``gate.force(trade_side="global")``) it evaluates the same
+    semantics over ONE global ordered window — a deliberate
     ``Exchange SinglePartition`` that is the cheaper plan for bounded
     inputs (SCALE.md item 9's crossover). The helper columns are still
     attached (``_prev_last_p``/``_carry`` as typed NULLs — there is no
     earlier chunk), so stacked-lag consumers work unchanged and remain
     bit-identical across modes.
     """
-    if _FORCE_SIDE_MODE is not None:
-        mode = _FORCE_SIDE_MODE
-    if mode == "auto":
-        # column-pruned count: one cheap scan decides the crossover;
-        # callers that know their scale pass mode explicitly and skip
-        # it. The count is a per-build job (~0.1 s), so cache it on the
+    mode = gate.forced("trade_side")
+    if mode is None:
+        # column-pruned count: one cheap scan decides the crossover.
+        # The count is a per-build job (~0.1 s), so cache it on the
         # input frame object — the memoized source relations return the
         # SAME DataFrame across calls (a derived/repartitioned input is
         # a new object and re-counts correctly).
@@ -227,7 +209,7 @@ def chunked_side_frame(
                 df._fmk_count = n
             except AttributeError:
                 pass
-        mode = "global" if n <= small_rows else "chunked"
+        mode = "global" if n <= SIDE_SMALL_ROWS else "chunked"
     if mode == "global":
         w = Window.orderBy("ts_ns", "trade_id")
         raw = F.signum(F.col("price") - F.lag("price").over(w))
@@ -242,9 +224,6 @@ def chunked_side_frame(
             }
         )
         return d, w
-    if mode != "chunked":
-        raise ValueError(f"mode must be auto|global|chunked, got {mode!r}")
-    ck = F.col("_ck")
     d = df.withColumn("_ck", F.floor(F.col("ts_ns") / F.lit(int(chunk_ns))))
     w = Window.partitionBy("_ck").orderBy("ts_ns", "trade_id")
     wcum = w.rowsBetween(Window.unboundedPreceding, 0)

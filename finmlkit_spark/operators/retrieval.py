@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .. import cache
+from .. import cache, gate
 from . import text as TX
 
 #: fixed-point unit for integer PageRank (1.0 == 1e12 micro-units)
@@ -193,16 +193,22 @@ def bm25_topk(
 #: LocalTableScan. Above the gate the distributed loop runs unchanged —
 #: the 100 TB path never touches the driver. 2M edges ≈ 32 MB collected.
 PR_DRIVER_MAX_EDGES = 2_000_000
-_FORCE_PR_STATE: str | None = None  # test hook: "driver"/"distributed"
 
-_INT_DTS = ("tinyint", "smallint", "int", "bigint")
+#: largest rank ``unit`` the int64 recurrence holds: the damped update
+#: computes ``85 * Σcontrib`` with Σcontrib up to ``unit``, which past
+#: this bound wraps in numpy but raises under Spark ANSI
+PR_MAX_UNIT = (2**63 - 1) // 85
 
 
-def _pagerank_driver(spark, tbl, iters: int, unit: int, out_dt: str) -> DataFrame:
+def _check_unit(unit: int) -> None:
+    if not 0 < unit <= PR_MAX_UNIT:
+        raise ValueError(f"unit must satisfy 0 < unit <= {PR_MAX_UNIT}, got {unit}")
+
+
+def _pagerank_driver(spark, tbl, iters: int, unit: int, out_type) -> DataFrame:
     """Driver replica of :func:`pagerank`'s integer fixpoint for the
-    small-edge path. ``tbl``: a pyarrow table of (a, b) pairs; ``out_dt``
-    the Spark int dtype of the id column (the distributed path's
-    union-widened type, so the crossover is schema-invisible).
+    small-edge path. ``tbl``, ``out_type``: the pyarrow (a, b) pair
+    table and output id type from ``gate.int_edges``.
 
     Exactness: the distributed rounds are int64 ``DIV`` on non-negative
     operands throughout (contribution ``r DIV deg``, update
@@ -212,13 +218,6 @@ def _pagerank_driver(spark, tbl, iters: int, unit: int, out_dt: str) -> DataFram
     import numpy as np
     import pyarrow as pa
 
-    _pa_int = {
-        "tinyint": pa.int8(),
-        "smallint": pa.int16(),
-        "int": pa.int32(),
-        "bigint": pa.int64(),
-    }
-    out_type = _pa_int[out_dt]
     a = tbl.column("a").to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
     b = tbl.column("b").to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
     if len(a) == 0:
@@ -257,7 +256,6 @@ def pagerank(
     a_col: str = "id_a",
     b_col: str = "id_b",
     unit: int = PR_UNIT,
-    state: str = "auto",
 ) -> DataFrame:
     """Fixed-point PageRank (damping 0.85, ``iters`` synchronous
     rounds) over an undirected pair graph — centrality for picking the
@@ -304,51 +302,23 @@ def pagerank(
     (every node in a pair has degree ≥ 1, so every node receives
     messages each round — no dangling-mass term).
 
-    ``state="auto"`` (default, r14): probe the pair chain ONCE with a
-    ``LIMIT PR_DRIVER_MAX_EDGES+1`` Arrow collect — if every edge fits,
+    ``unit`` must satisfy ``0 < unit <= PR_MAX_UNIT`` (``ValueError``
+    otherwise).
+
+    Crossover (``gate.int_edges``; tests pin a side with
+    ``gate.force(pagerank=...)``): probe the pair chain ONCE with a
+    ``LIMIT PR_DRIVER_MAX_EDGES+1`` Arrow fetch — if every edge fits,
     the whole fixpoint runs vectorized on the driver (bit-identical —
     see :func:`_pagerank_driver`) and replants as a LocalTableScan,
     skipping all ``iters`` join+agg rounds; otherwise fall through to
     the distributed loop below (the probe's cost is one execution of
     the pair chain, the ``dedup_clusters`` crossover discipline).
     """
-    st = _FORCE_PR_STATE or state
-    if st not in ("auto", "driver", "distributed"):
-        raise ValueError(
-            f"pagerank: unknown state {st!r} "
-            "(expected 'auto', 'driver' or 'distributed')"
-        )
-    dts = dict(pairs.dtypes)
-    int_ids = dts[a_col] in _INT_DTS and dts[b_col] in _INT_DTS
-    if st == "driver" and not int_ids:
-        raise ValueError(
-            "pagerank: the driver fixpoint supports integer ids only — "
-            "use state='distributed' for other id types"
-        )
-    if st in ("auto", "driver") and int_ids:
-        tbl = (
-            pairs.select(F.col(a_col).alias("a"), F.col(b_col).alias("b"))
-            .limit(PR_DRIVER_MAX_EDGES + 1)
-            .toArrow()
-        )
-        no_nulls = (
-            tbl.column("a").null_count == 0 and tbl.column("b").null_count == 0
-        )
-        if tbl.num_rows <= PR_DRIVER_MAX_EDGES and no_nulls:
-            # the distributed union widens src/dst to the wider input
-            # int type; emit the same so the crossover never flips schema
-            common_dt = max(dts[a_col], dts[b_col], key=_INT_DTS.index)
-            return _pagerank_driver(
-                pairs.sparkSession, tbl, iters, unit, common_dt
-            )
-        if st == "driver":
-            raise ValueError(
-                "pagerank: state='driver' but the edge list exceeds "
-                f"PR_DRIVER_MAX_EDGES={PR_DRIVER_MAX_EDGES} or contains "
-                "NULL ids"
-            )
-        # fall through: the pair chain re-executes in the loop below —
-        # the price of a wrong probe, paid only above the gate
+    _check_unit(unit)
+    small = gate.int_edges("pagerank", pairs, a_col, b_col, PR_DRIVER_MAX_EDGES)
+    if small is not None:
+        tbl, out_type = small
+        return _pagerank_driver(pairs.sparkSession, tbl, iters, unit, out_type)
     e = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
     und = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     # one exchange by dst attaches the receiving node's degree to
@@ -414,9 +384,11 @@ def central_reps(
     union-find below its edge gate, distributed min-label above) and
     the integer PageRank; the election is one per-cluster
     ``row_number() = 1`` (WindowGroupLimit). Exact end-to-end: CC
-    labels and fixed-point ranks are integers, the tie-break total."""
+    labels and fixed-point ranks are integers, the tie-break total.
+    ``unit`` is bounded as in :func:`pagerank`."""
     from . import dedup as DD
 
+    _check_unit(unit)
     e = cache.cut(
         pairs.select(F.col(a_col).alias("doc_a"), F.col(b_col).alias("doc_b"))
     )

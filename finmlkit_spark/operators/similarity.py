@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .. import cache
+from .. import cache, gate
 from ..functions.sqlstage import sql_stage
 
 DIM = 64
@@ -22,10 +22,9 @@ N_PLANES = 16
 _INT64_BOUND = 9.223372036854775808e18  # 2^63 — the smallest double ≥ int64 max
 
 # Driver-carried k-means engages a two-level (executor pre-reduce)
-# partial fold above this many input partitions; None = auto. Tests pin
-# both paths bit-identical by forcing True/False.
+# partial fold above this many input partitions. Tests pin both paths
+# bit-identical with gate.force(kmeans_tree="tree"|"flat").
 _KMEANS_TREE_MIN_PARTS = 64
-_FORCE_KMEANS_TREE: bool | None = None
 
 
 def _saturating_int64(Qf):
@@ -775,11 +774,8 @@ def _kmeans_train_driver(
     if iters <= 0:
         return cents
     part_schema = "cid bigint, n0 bigint, s array<bigint>"
-    tree = (
-        _FORCE_KMEANS_TREE
-        if _FORCE_KMEANS_TREE is not None
-        else nparts > _KMEANS_TREE_MIN_PARTS
-    )
+    side = gate.forced("kmeans_tree")
+    tree = side == "tree" if side is not None else nparts > _KMEANS_TREE_MIN_PARTS
     for _ in range(iters):
         if not cents:
             break
@@ -2189,8 +2185,8 @@ def ann_sq8_search(
     measured sf0.1→sf1 growth 2.0× vs the full scan's 3.6×, SCALE.md).
 
     ``mode``: ``"full"`` / ``"ivf"`` force a side; ``"auto"`` routes on
-    ``n_rows`` (pass a parquet-footer count when you have one — the
-    suite's ``_parquet_num_rows`` posture, no Spark job). When
+    ``n_rows`` (pass a parquet-footer count when you have one —
+    ``gate.footer_rows``, no Spark job). When
     ``n_rows`` is None under auto, ONE narrow count job on the pruned
     id column decides (cheap next to the search itself; documented
     rather than hidden).
@@ -2327,7 +2323,9 @@ def embedding_outliers(
     )
 
 
-_FORCE_DIVERSE_MODE: str | None = None  # test hook: "onebatch" | "perpass"
+#: diverse_sample's crossover: at or below this many bytes of vectors
+#: the whole (id, vector) projection is fetched once to the driver
+DIVERSE_ONEBATCH_MAX_BYTES = 64 << 20
 
 
 def diverse_sample(
@@ -2336,7 +2334,6 @@ def diverse_sample(
     id_col: str = "vec_id",
     emb_col: str = "embedding",
     n_rows: int | None = None,
-    onebatch_bytes_cap: int = 64 << 20,
 ) -> DataFrame:
     """Greedy k-center (Gonzalez) max-min selection: start from the
     lowest id, then repeatedly select the vector FARTHEST (cosine
@@ -2348,9 +2345,10 @@ def diverse_sample(
     seed).
 
     Scale shape — two execution modes, bit-identical results (pinned by
-    ``test_diverse_sample_modes_bit_identical``):
+    ``test_diverse_sample_modes_bit_identical`` through
+    ``gate.force(diverse_sample=...)``):
 
-    - ``onebatch`` (below ``onebatch_bytes_cap``, default 64 MB of
+    - ``onebatch`` (below ``DIVERSE_ONEBATCH_MAX_BYTES``, 64 MB of
       vectors, footer-count-gated via ``n_rows`` — the suite passes the
       parquet footer count, unhinted calls run one narrow count job):
       the (id, vector) projection crosses to the driver ONCE and the k
@@ -2403,11 +2401,11 @@ def diverse_sample(
             F.lit(0.0).alias("min_dist"),
         ).where(F.lit(False))
     dim = len(first[0]["v"])
-    mode = _FORCE_DIVERSE_MODE
+    mode = gate.forced("diverse_sample")
     if mode is None:
         if n_rows is None:
             n_rows = proj.select("id").count()
-        mode = "onebatch" if n_rows * dim * 8 <= onebatch_bytes_cap else "perpass"
+        mode = "onebatch" if n_rows * dim * 8 <= DIVERSE_ONEBATCH_MAX_BYTES else "perpass"
 
     if mode == "onebatch":
         pdf = proj.toPandas()

@@ -124,10 +124,6 @@ def memo_put(
     return df
 
 
-def memo_get(spark: SparkSession, path: str, tag: str) -> DataFrame | None:
-    return _RELATION_MEMO.get(_memo_key(spark, path, tag))
-
-
 #: derived-table memos elsewhere in the package (e.g. the labels
 #: suite's spans memo) register themselves here so memo_clear() is one
 #: switch for ALL session-scoped memoization

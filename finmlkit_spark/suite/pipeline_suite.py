@@ -13,6 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from .. import gate
 from ..functions import chunked_window as CW
 from ..functions import rolling as R
 from ._registry import query
@@ -33,12 +34,6 @@ FLAGSHIP_WARMUP = 24
 #: sub-threshold bar stream — callers may pass the (cheaply known)
 #: upstream row count as ``input_rows`` without executing the bar agg.
 FLAGSHIP_SMALL_ROWS = 1_000_000
-
-#: test hook: force a flagship window mode regardless of the caller's
-#: choice (test_plan_regression pins "chunked" to assert the at-scale
-#: plan has zero SinglePartition even though bench-scale inputs
-#: auto-select the global window)
-_FORCE_FLAGSHIP_MODE: str | None = None
 
 #: memoized flagship projection Columns (see _flagship_project)
 _FLAGSHIP_PROJECT_CACHE: tuple | None = None
@@ -151,6 +146,19 @@ def _flagship_project():
     return list(cols)
 
 
+def flagship_mode(mode: str = "auto", input_rows: int | None = None) -> str:
+    """The flagship window mode: a ``gate.force(flagship=...)`` pin
+    wins over ``mode``; ``"auto"`` resolves to ``"global"`` when the
+    row-count bound ``input_rows`` is under ``FLAGSHIP_SMALL_ROWS``,
+    else (including an unknown bound) ``"chunked"``."""
+    mode = gate.forced("flagship") or mode
+    if mode != "auto":
+        return mode
+    if input_rows is not None and input_rows < FLAGSHIP_SMALL_ROWS:
+        return "global"
+    return "chunked"
+
+
 def flagship_feature_stage(
     bars,
     chunk_rows: int = 8192,
@@ -169,14 +177,7 @@ def flagship_feature_stage(
     row-identical across modes (bounded frames + warmup overlap =>
     identical frame contents per row — see chunked_window docs).
     Reused by the registry query and the bench's synthetic scale probe."""
-    if _FORCE_FLAGSHIP_MODE is not None:
-        mode = _FORCE_FLAGSHIP_MODE
-    if mode == "auto":
-        mode = (
-            "global"
-            if input_rows is not None and input_rows < FLAGSHIP_SMALL_ROWS
-            else "chunked"
-        )
+    mode = flagship_mode(mode, input_rows)
     if mode == "global":
         from pyspark.sql import Window
 
@@ -232,46 +233,14 @@ def pipeline_1m_features(spark, sf_dir):
     output either way (``test_chunked_window`` pins the equivalence;
     ``test_plan_regression`` pins the chunked plan at the forced
     at-scale setting)."""
-    n = _parquet_num_rows(f"{sf_dir}/events.parquet")
-    # resolve the mode HERE too (same rule flagship_feature_stage
-    # applies, including the test force-hook) so the below-crossover
-    # form can also build its bars single-partition: the global window
-    # serializes anyway, and moving the boundary below the agg fuses
-    # agg+window+projection into one post-shuffle stage (bars_1m
-    # ``onepart`` doc). The chunked/at-scale plan never takes this
-    # branch — test_plan_regression's zero-SinglePartition pin holds.
-    mode = _FORCE_FLAGSHIP_MODE or (
-        "global"
-        if n is not None and n < FLAGSHIP_SMALL_ROWS
-        else "chunked"
-    )
+    # resolve the mode before building the bars: the below-crossover
+    # global window serializes anyway, so its bars build
+    # single-partition too, fusing agg+window+projection into one
+    # post-shuffle stage (bars_1m ``onepart`` doc). The chunked/at-scale
+    # plan never takes this branch — test_plan_regression's
+    # zero-SinglePartition pin holds.
+    mode = flagship_mode(input_rows=gate.footer_rows(f"{sf_dir}/events.parquet"))
     return flagship_feature_stage(
-        bars_1m(spark, sf_dir, seq=False, onepart=(mode == "global")),
-        mode=mode,
-        input_rows=n,
+        bars_1m(spark, sf_dir, seq=False, onepart=(mode == "global")), mode=mode
     )
 
-
-def _parquet_num_rows(path: str) -> int | None:
-    """Footer-only row count for BOTH single-file and directory-style
-    (Spark-written) parquet tables — no Spark job. Returns None when the
-    footers can't be read: the probe is a pure cost heuristic, and on
-    None ``mode="auto"`` conservatively picks the chunked plan instead
-    of turning the heuristic into a hard failure."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    try:
-        if os.path.isdir(path):
-            total = 0
-            for root, _dirs, files in os.walk(path):
-                for f in files:
-                    if f.endswith(".parquet"):
-                        total += pq.ParquetFile(
-                            os.path.join(root, f)
-                        ).metadata.num_rows
-            return total
-        return pq.ParquetFile(path).metadata.num_rows
-    except Exception:
-        return None

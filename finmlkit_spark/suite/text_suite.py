@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from .. import gate
 from ..operators import corpus as CP
 from ..operators import dedup as D
 from ..operators import multimodal as MM
@@ -32,11 +33,6 @@ _PH = (
 )
 
 _TOKS = "WITH toks AS (SELECT doc_id, string_split_regex(trim(text), ' +') AS t FROM documents)"
-
-_SH = (
-    "list_distinct(list_transform(range(1, greatest(len(t) - 2, 0) + 1), "
-    "i -> concat(t[i], ' ', t[i + 1], ' ', t[i + 2])))"
-)
 
 # token hashes -> combined shingle hashes (mirrors
 # text.token_hashes + text.shingle_hashes_from_tokens)
@@ -757,13 +753,15 @@ FROM c a JOIN c b ON a.cls = b.cls AND a.doc_id < b.doc_id""",
 )
 def image_phash_pairs(spark, sf_dir):
     """Image-level perceptual dedup end-to-end: a deterministic 24x32
-    image per doc (pixel formula keyed on doc_id % 250, verified
-    collision-free across the 250 classes) is PNG-encoded executor-side;
+    image per doc (pixel formula keyed on doc_id % 250; the 250 class
+    images are pairwise distinct) is PNG-encoded executor-side;
     ``multimodal.phash_dup_pairs`` decodes, computes the 32x32-DCT
-    perceptual hash, and equi-joins on it. The oracle lists same-class
-    pairs symbolically — a hash match proves decode -> resample -> DCT
-    -> bit-pack -> join finds exactly the true duplicate pairs (and no
-    false ones) at any sf."""
+    perceptual hash, equi-joins on it and verifies each candidate on
+    the decoded pixel grid. Some distinct classes share a hash (these
+    low-entropy images leave most hashed coefficients zero), so the
+    oracle's same-class pairs check decode -> resample -> DCT ->
+    bit-pack -> join -> verify finds exactly the true duplicate pairs
+    (and no false ones) at any sf."""
     import numpy as np
     import pandas as pd
 
@@ -1069,8 +1067,6 @@ def bpe_segment_q(spark, sf_dir):
     train → apply loop end-to-end."""
     from ..operators import corpus as CP
 
-    from .pipeline_suite import _parquet_num_rows
-
     merges = [
         (r["lhs"], r["rhs"])
         for r in CP.bpe_train(_docs(spark, sf_dir), n_merges=10).collect()
@@ -1079,7 +1075,7 @@ def bpe_segment_q(spark, sf_dir):
     # the chained merge folds are CPU-bound per row: spread a small
     # single-partition file across cores (the gopher_repetition
     # crossover); at corpus scale the scan is already parallel
-    n = _parquet_num_rows(f"{sf_dir}/documents.parquet")
+    n = gate.footer_rows(f"{sf_dir}/documents.parquet")
     if n is not None and n < 100_000:
         docs = docs.repartition(spark.sparkContext.defaultParallelism)
     return CP.bpe_apply(docs, merges)
@@ -1481,9 +1477,8 @@ def gopher_repetition_q(spark, sf_dir):
     keep decision. Shares round to 6 digits; the keep decision is
     exact-integer on both engines."""
     from ..operators import corpus as CP
-    from .pipeline_suite import _parquet_num_rows
 
-    n = _parquet_num_rows(f"{sf_dir}/documents.parquet")
+    n = gate.footer_rows(f"{sf_dir}/documents.parquet")
     par = (
         spark.sparkContext.defaultParallelism
         if n is not None and n < 100_000
@@ -2187,9 +2182,7 @@ def segment_dedup_q(spark, sf_dir):
     buys nothing at bench scale and its extra exchanges cost 3 of the
     4 AQE job barriers (round-10 A/B); sf1 (50k docs) and beyond keep
     the at-scale digest-partitioned plan."""
-    from .pipeline_suite import _parquet_num_rows
-
-    n = _parquet_num_rows(f"{sf_dir}/documents.parquet")
+    n = gate.footer_rows(f"{sf_dir}/documents.parquet")
     return CP.segment_dedup(
         _docs(spark, sf_dir), seg_tokens=8,
         onepart=(n is not None and n < 20_000),
@@ -2942,9 +2935,7 @@ def diverse_sample_q(spark, sf_dir):
     the k greedy steps run in numpy (ONE job); above it, k map-only
     Arrow argmax passes over the lineage-cut frame — bit-identical by
     the A/B mode test."""
-    from .pipeline_suite import _parquet_num_rows
-
-    n = _parquet_num_rows(f"{sf_dir}/embeddings.parquet")
+    n = gate.footer_rows(f"{sf_dir}/embeddings.parquet")
     return SIM.diverse_sample(_embs(spark, sf_dir), k=8, n_rows=n)
 
 

@@ -80,15 +80,12 @@ def test_flagship_plan_has_no_single_partition(spark):
     # the registry query auto-selects the (deliberately single-partition)
     # global window below the measured crossover; force the at-scale mode
     # to assert the plan a 100 TB stream would get
+    from finmlkit_spark import gate
     from finmlkit_spark.suite import QUERIES
-    from finmlkit_spark.suite import pipeline_suite as PS
 
-    PS._FORCE_FLAGSHIP_MODE = "chunked"
-    try:
+    with gate.force(flagship="chunked"):
         df = QUERIES["pipeline_1m_features"](spark, SF_SMALL)
         plan = df._jdf.queryExecution().executedPlan().toString()
-    finally:
-        PS._FORCE_FLAGSHIP_MODE = None
     assert "SinglePartition" not in plan
 
 
@@ -200,7 +197,8 @@ def test_flagship_modes_bit_identical(spark):
 def test_flagship_auto_crossover_picks_mode_by_input_rows(spark):
     """mode='auto' plans the global window below FLAGSHIP_SMALL_ROWS and
     the chunked zero-SinglePartition plan at/above it (or when the bound
-    is unknown); the force hook overrides both ways."""
+    is unknown); ``gate.force`` overrides both ways."""
+    from finmlkit_spark import gate
     from finmlkit_spark.suite import pipeline_suite as PS
     from finmlkit_spark.suite.features_suite import bars_1m
 
@@ -216,9 +214,6 @@ def test_flagship_auto_crossover_picks_mode_by_input_rows(spark):
     )
     # unknown bound -> conservative chunked plan
     assert "SinglePartition" not in plan(mode="auto", input_rows=None)
-    # the test hook wins over the caller's choice
-    PS._FORCE_FLAGSHIP_MODE = "global"
-    try:
+    # a forced side wins over the caller's choice
+    with gate.force(flagship="global"):
         assert "SinglePartition" in plan(mode="chunked")
-    finally:
-        PS._FORCE_FLAGSHIP_MODE = None

@@ -181,24 +181,22 @@ def test_kmeans_tree_fold_bit_identical_to_flat(spark):
     """The two-level (executor pre-reduce) partial fold must produce
     bit-identical centroids to the flat driver fold: int64 adds are
     associative, so any re-grouping of the k·P partials is exact. Forced
-    on/off via the test hook regardless of input partition count."""
+    on/off with ``gate.force`` regardless of input partition count."""
+    from finmlkit_spark import gate
     from finmlkit_spark.operators import similarity as SIM
 
     embs = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").repartition(8)
     results = {}
-    for force in (False, True):
-        SIM._FORCE_KMEANS_TREE = force
-        try:
-            results[force] = {
+    for side in ("flat", "tree"):
+        with gate.force(kmeans_tree=side):
+            results[side] = {
                 r["vec_id"]: (r["cluster_id"], r["cos_sim"])
                 for r in SIM.kmeans_assign(
                     embs, k=8, iters=2, dim=64, state="driver"
                 ).collect()
             }
-        finally:
-            SIM._FORCE_KMEANS_TREE = None
-    assert results[False] == results[True]
-    assert len(results[False]) == embs.count()
+    assert results["flat"] == results["tree"]
+    assert len(results["flat"]) == embs.count()
 
 
 def test_semantic_pairs_memoized_centroids_bit_identical_and_cached(spark):

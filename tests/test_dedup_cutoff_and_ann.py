@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from finmlkit_spark import gate
 from finmlkit_spark.operators import dedup as D
 
 
@@ -807,14 +808,11 @@ def test_diverse_sample_modes_bit_identical(spark):
     embs = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     got = {}
     for mode in ("onebatch", "perpass"):
-        SIM._FORCE_DIVERSE_MODE = mode
-        try:
+        with gate.force(diverse_sample=mode):
             got[mode] = sorted(
                 (r["sel_order"], r["vec_id"], struct.pack("<d", r["min_dist"]))
                 for r in SIM.diverse_sample(embs, k=6).collect()
             )
-        finally:
-            SIM._FORCE_DIVERSE_MODE = None
     assert got["onebatch"] == got["perpass"]
     assert len(got["onebatch"]) == 6
 
@@ -873,12 +871,9 @@ def test_diverse_sample_string_ids_both_modes(spark):
         for r in SIM.diverse_sample(embs, k=5).collect()
     )
     for mode in ("onebatch", "perpass"):
-        SIM._FORCE_DIVERSE_MODE = mode
-        try:
+        with gate.force(diverse_sample=mode):
             got = sorted(
                 (r["sel_order"], r["vec_id"], struct.pack("<d", r["min_dist"]))
                 for r in SIM.diverse_sample(sembs, k=5).collect()
             )
-        finally:
-            SIM._FORCE_DIVERSE_MODE = None
         assert got == base, mode

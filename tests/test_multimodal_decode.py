@@ -246,6 +246,63 @@ def test_phash_invariance_and_discrimination(spark):
     assert pairs == [(1, 2)]
 
 
+def _phash_class_png(cls):
+    """The image_phash_pairs query's image for class ``cls``."""
+    import numpy as np
+
+    from finmlkit_spark.operators.multimodal import encode_png
+
+    i = np.arange(24 * 32, dtype=np.int64)
+    img = ((cls * 31 + 7) * i + cls * cls) % 256
+    return encode_png(img.astype(np.uint8).reshape(24, 32))
+
+
+def test_phash_tie_rule_constant_image_and_summation_order():
+    """pHash bits must not come from float64 rounding noise. A constant
+    image has only zero AC coefficients, so every bit is a tie and the
+    hash is 0. Class 39 has 59 of its 63 hashed coefficients exactly
+    zero; four summation orders of its DCT round them differently (the
+    plain ``coeff > median`` rule gives four different hashes), and the
+    tie rule gives one."""
+    import numpy as np
+
+    from finmlkit_spark.operators.multimodal import (
+        encode_png,
+        image_pixels,
+        lum32,
+        phash64,
+        phash_bits,
+    )
+
+    assert phash64(image_pixels(encode_png(np.full((24, 32), 77, dtype=np.uint8)))) == 0
+    px = image_pixels(_phash_class_png(39))
+    s, k, rev = lum32(px), np.arange(32), slice(None, None, -1)
+    C = np.cos(np.pi * (2 * k[None, :] + 1) * k[:, None] / 64)
+    orders = [
+        (C @ s) @ C.T,
+        C @ (s @ C.T),
+        (C[:, rev] @ s[rev, :][:, rev]) @ C.T[rev, :],
+        np.einsum("ux,xy,vy->uv", C, s, C),
+    ]
+    assert not any(np.array_equal(orders[0], d) for d in orders[1:])
+    assert {phash_bits(d) for d in orders} == {phash64(px)}
+
+
+def test_phash_dup_pairs_verifies_pixels(spark):
+    """Classes 39 and 71 share a pHash but differ in most pixels: the
+    hash join proposes them, the pixel check drops them, and true copies
+    still pair."""
+    import pandas as pd
+
+    from finmlkit_spark.operators.multimodal import image_pixels, phash64, phash_dup_pairs
+
+    a, b = _phash_class_png(39), _phash_class_png(71)
+    assert phash64(image_pixels(a)) == phash64(image_pixels(b))
+    df = spark.createDataFrame(pd.DataFrame({"doc_id": [1, 2, 3, 4], "payload": [a, b, a, b]}))
+    pairs = phash_dup_pairs(df).select("doc_a", "doc_b").collect()
+    assert sorted(map(tuple, pairs)) == [(1, 3), (2, 4)]
+
+
 def test_phash_near_pairs_catches_noised_copy(spark):
     """A lightly-noised copy (few flipped low bits) lands within the
     hamming tolerance; unrelated images do not."""

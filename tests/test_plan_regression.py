@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import pytest
 
+from finmlkit_spark import gate
 from finmlkit_spark.suite import QUERIES
 
 SF = "/root/testdata/sf0.001"
@@ -90,20 +91,9 @@ def test_no_single_partition_exchange(spark, name):
     # (deliberately single-partition) global window below its measured
     # crossover, so this guard forces the large-input mode to assert
     # the plan a 100 TB stream would get
-    from finmlkit_spark.operators import corpus as CP
-    from finmlkit_spark.operators import preprocess as P
-    from finmlkit_spark.suite import pipeline_suite as PS
-
-    P._FORCE_SIDE_MODE = "chunked"
-    PS._FORCE_FLAGSHIP_MODE = "chunked"
-    CP._FORCE_SEGDEDUP_ONEPART = False
-    try:
+    with gate.force(trade_side="chunked", flagship="chunked", segment_dedup="parallel"):
         df = QUERIES[name](spark, SF)
         plan = df._jdf.queryExecution().executedPlan().toString()
-    finally:
-        P._FORCE_SIDE_MODE = None
-        PS._FORCE_FLAGSHIP_MODE = None
-        CP._FORCE_SEGDEDUP_ONEPART = None
     assert "Exchange SinglePartition" not in plan, (
         f"{name}: plan regressed to a single-partition exchange:\n{plan}"
     )
@@ -125,26 +115,21 @@ def test_triple_barrier_is_pure_join_aggregate(spark):
 
 def test_segment_dedup_modes_bit_identical(spark):
     """The round-10 below-crossover ``onepart`` fusion must be a pure
-    physical-plan change: forcing each mode via the test hook on the
+    physical-plan change: forcing each mode with ``gate.force`` on the
     same input must yield byte-identical rows (row_number ranks by
     (doc, seg_no) inside each digest group regardless of partitioning,
     and the reassembly agg sorts the collected structs). Also pins that
     the fused mode actually takes the single-partition fused shape —
     the whole point of the crossover."""
-    from finmlkit_spark.operators import corpus as CP
-
     results, plans = {}, {}
-    for mode in (False, True):
-        CP._FORCE_SEGDEDUP_ONEPART = mode
-        try:
+    for side in ("parallel", "onepart"):
+        with gate.force(segment_dedup=side):
             df = QUERIES["segment_dedup"](spark, SF)
-            plans[mode] = df._jdf.queryExecution().executedPlan().toString()
-            results[mode] = sorted(map(tuple, df.collect()))
-        finally:
-            CP._FORCE_SEGDEDUP_ONEPART = None
-    assert results[False] == results[True]
-    assert "Exchange SinglePartition" not in plans[False]
-    assert "Exchange SinglePartition" in plans[True]
+            plans[side] = df._jdf.queryExecution().executedPlan().toString()
+            results[side] = sorted(map(tuple, df.collect()))
+    assert results["parallel"] == results["onepart"]
+    assert "Exchange SinglePartition" not in plans["parallel"]
+    assert "Exchange SinglePartition" in plans["onepart"]
 
 
 def test_pmi_topk_is_take_ordered(spark):

@@ -3,6 +3,7 @@ size, timestamp normalization) and the Binance CSV reader shape."""
 
 from __future__ import annotations
 
+from finmlkit_spark import gate
 from finmlkit_spark.operators import preprocess as P
 from finmlkit_spark.sources.trades import read_binance_csv
 
@@ -64,7 +65,8 @@ def test_trade_side_chunked_matches_global(spark):
     }
     # hourly chunks over a month of sparse data: many chunks, some empty,
     # single-row chunks — every cross-chunk carry path gets exercised
-    chunked = P.with_trade_side_chunked(tr, chunk_ns=3_600_000_000_000, mode="chunked")
+    with gate.force(trade_side="chunked"):
+        chunked = P.with_trade_side_chunked(tr, chunk_ns=3_600_000_000_000)
     got = {
         r["trade_id"]: r["side"]
         for r in chunked.select("trade_id", "side").collect()
@@ -111,8 +113,7 @@ def test_trade_side_chunked_plateaus_and_constant_chunks(spark):
         r["trade_id"]: r["side"]
         for r in P.with_trade_side(tr, by=None).select("trade_id", "side").collect()
     }
-    got = {
-        r["trade_id"]: r["side"]
-        for r in P.with_trade_side_chunked(tr, chunk_ns=MIN, mode="chunked").select("trade_id", "side").collect()
-    }
+    with gate.force(trade_side="chunked"):
+        chunked = P.with_trade_side_chunked(tr, chunk_ns=MIN)
+    got = {r["trade_id"]: r["side"] for r in chunked.select("trade_id", "side").collect()}
     assert got == glob

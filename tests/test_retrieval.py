@@ -8,6 +8,7 @@ import math
 
 import pytest
 
+from finmlkit_spark import gate
 from finmlkit_spark.operators import retrieval as RT
 
 DOCS = [
@@ -138,11 +139,8 @@ def test_pagerank_driver_distributed_parity(spark):
     df = spark.createDataFrame(edges, "id_a long, id_b long")
     out = {}
     for st in ("driver", "distributed"):
-        RT._FORCE_PR_STATE = st
-        try:
+        with gate.force(pagerank=st):
             out[st] = {r["id"]: r["rank_fp"] for r in RT.pagerank(df).collect()}
-        finally:
-            RT._FORCE_PR_STATE = None
     assert out["driver"] == out["distributed"]
     assert out["driver"] == _pagerank_reference(edges)
 
@@ -153,24 +151,39 @@ def test_pagerank_driver_gate_schema_and_empty(spark):
     df = spark.createDataFrame([(1, 2)], "id_a int, id_b bigint")
     out = {}
     for st in ("driver", "distributed"):
-        RT._FORCE_PR_STATE = st
-        try:
+        with gate.force(pagerank=st):
             got = RT.pagerank(df)
             out[st] = (got.schema.simpleString(), sorted(map(tuple, got.collect())))
-        finally:
-            RT._FORCE_PR_STATE = None
     assert out["driver"] == out["distributed"]
     empty = spark.createDataFrame([], "id_a long, id_b long")
-    RT._FORCE_PR_STATE = "driver"
-    try:
+    with gate.force(pagerank="driver"):
         got = RT.pagerank(empty)
         assert got.collect() == []
         assert [f.dataType.simpleString() for f in got.schema.fields] == [
             "bigint",
             "bigint",
         ]
-    finally:
-        RT._FORCE_PR_STATE = None
+
+
+def test_pagerank_unit_bound(spark):
+    """``unit`` must satisfy 0 < unit <= (2**63 - 1) // 85: past the
+    upper edge the driver path's numpy int64 wraps where Spark ANSI
+    raises. Both edges are accepted and agree across the gate's sides;
+    one step past either edge raises in pagerank and central_reps."""
+    assert RT.PR_MAX_UNIT == (2**63 - 1) // 85
+    df = spark.createDataFrame([(1, 2), (2, 3), (3, 1), (3, 4)], "id_a long, id_b long")
+    for unit in (1, RT.PR_MAX_UNIT):
+        out = {}
+        for st in ("driver", "distributed"):
+            with gate.force(pagerank=st):
+                out[st] = sorted(map(tuple, RT.pagerank(df, unit=unit).collect()))
+        assert out["driver"] == out["distributed"], unit
+        assert len(RT.central_reps(df, unit=unit).collect()) == 1
+    for unit in (0, -1, RT.PR_MAX_UNIT + 1):
+        with pytest.raises(ValueError, match="unit"):
+            RT.pagerank(df, unit=unit)
+        with pytest.raises(ValueError, match="unit"):
+            RT.central_reps(df, unit=unit)
 
 
 def test_bm25_plan_is_take_ordered(spark):

@@ -436,6 +436,7 @@ def test_dedup_clusters_driver_and_distributed_bit_identical(spark):
     min-per-component either way. Covers random graphs AND a deep chain."""
     import random
 
+    from finmlkit_spark import gate
     from finmlkit_spark.operators import dedup as D
 
     rng = random.Random(8)
@@ -452,14 +453,11 @@ def test_dedup_clusters_driver_and_distributed_bit_identical(spark):
     docs = spark.range(0, 1100).select(F.col("id").alias("doc_id"))
     out = {}
     for st in ("driver", "distributed"):
-        D._FORCE_CC_STATE = st
-        try:
+        with gate.force(dedup_clusters=st):
             out[st] = {
                 r["doc_id"]: r["cluster_id"]
                 for r in D.dedup_clusters(pairs, docs).collect()
             }
-        finally:
-            D._FORCE_CC_STATE = None
     assert out["driver"] == out["distributed"]
     assert len(out["driver"]) == 1100
     assert out["driver"][1015] == 1000
@@ -470,11 +468,8 @@ def test_dedup_clusters_driver_and_distributed_bit_identical(spark):
     deep = spark.createDataFrame(
         [(2000 + i, 2000 + i + 1) for i in range(120)], "doc_a long, doc_b long"
     )
-    D._FORCE_CC_STATE = "driver"
-    try:
+    with gate.force(dedup_clusters="driver"):
         got = {r["doc_id"]: r["cluster_id"] for r in D.dedup_clusters(deep).collect()}
-    finally:
-        D._FORCE_CC_STATE = None
     star = {
         r["doc_id"]: r["cluster_id"] for r in D.dedup_clusters_star(deep).collect()
     }

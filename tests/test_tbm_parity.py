@@ -15,6 +15,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from finmlkit_spark import gate
 from finmlkit_spark.operators import labels as L
 
 HOUR_NS = 3_600_000_000_000
@@ -245,7 +246,8 @@ def test_return_attribution_sweep_matches_range_join(spark):
 
     from finmlkit_spark.operators import preprocess as P
 
-    d, w = P.chunked_side_frame(trades, chunk_ns=H, mode="chunked")
+    with gate.force(trade_side="chunked"):
+        d, w = P.chunked_side_frame(trades, chunk_ns=H)
     rr = F.log(F.col("price") / F.coalesce(F.lag("price").over(w), F.col("_prev_last_p")))
     sweep_df = L.return_attribution_sweep(spans, d.select("ts_ns", rr.alias("r")), chunk_ns=H)
     new = {r["event_id"]: r["attribution"] for r in sweep_df.collect()}
@@ -338,16 +340,13 @@ def test_span_sweep_driver_and_cut_states_bit_identical(spark):
     tr, spans, n = LS._trades_spans(spark, "/root/testdata/sf0.001")
     out = {}
     for st in ("cut", "driver"):
-        L._FORCE_SWEEP_SMALL_STATE = st
-        try:
+        with gate.force(span_sweep=st):
             out[st] = {
                 r["event_id"]: (r["event_ts_ns"], r["s_span"], r["n_span"])
                 for r in L.span_sweep(
                     spans, tr, val_col=None, chunk_ns=LS.HOUR_NS, est_events=n
                 ).collect()
             }
-        finally:
-            L._FORCE_SWEEP_SMALL_STATE = None
     assert out["cut"] == out["driver"]
     assert len(out["cut"]) > 0
 
@@ -380,16 +379,13 @@ def test_span_sweep_degenerate_inputs_both_states(spark):
             spans = spans.where(F.lit(False))
         out = {}
         for st in ("driver", "cut"):
-            L._FORCE_SWEEP_SMALL_STATE = st
-            try:
+            with gate.force(span_sweep=st):
                 out[st] = sorted(
                     tuple(r)
                     for r in L.span_sweep(
                         spans, trades, chunk_ns=100, est_events=len(spans_rows)
                     ).collect()
                 )
-            finally:
-                L._FORCE_SWEEP_SMALL_STATE = None
         assert out["driver"] == out["cut"], (name, out)
         if name == "empty":
             assert out["driver"] == []

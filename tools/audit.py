@@ -126,7 +126,7 @@ def condense(plan: str, max_lines: int = 40) -> list[str]:
 
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    from finmlkit_spark import suite
+    from finmlkit_spark import gate, suite
     from finmlkit_spark.session import get_spark
 
     spark = get_spark("audit")
@@ -161,14 +161,9 @@ def main():
     # the flagship's at-scale plan: the registry query auto-selects the
     # global window below the crossover, so force the chunked mode to
     # record the zero-SinglePartition plan a 100 TB stream would get
-    from finmlkit_spark.suite import pipeline_suite as PS
-
-    PS._FORCE_FLAGSHIP_MODE = "chunked"
-    try:
+    with gate.force(flagship="chunked"):
         df = suite.QUERIES["pipeline_1m_features"](spark, sf_dir)
         plan = df._jdf.queryExecution().executedPlan().toString()
-    finally:
-        PS._FORCE_FLAGSHIP_MODE = None
     print("## pipeline_1m_features (forced chunked — the at-scale plan)\n")
     print("```")
     for line in condense(plan):
@@ -179,15 +174,10 @@ def main():
     # one-partition fused form below its 20k-doc crossover, so force the
     # digest-parallel mode to record the zero-SinglePartition plan a
     # 100 TB corpus would get (pinned by test_plan_regression)
-    from finmlkit_spark.operators import corpus as CP
-
-    CP._FORCE_SEGDEDUP_ONEPART = False
-    try:
+    with gate.force(segment_dedup="parallel"):
         df = suite.QUERIES["segment_dedup"](spark, sf_dir)
         plan = df._jdf.queryExecution().executedPlan().toString()
-    finally:
-        CP._FORCE_SEGDEDUP_ONEPART = None
-    print("## segment_dedup (forced onepart=False — the at-scale plan)\n")
+    print("## segment_dedup (forced parallel — the at-scale plan)\n")
     print("```")
     for line in condense(plan):
         print(line)
